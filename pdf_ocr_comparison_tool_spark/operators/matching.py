@@ -336,13 +336,22 @@ def match_pages(
     # pair set). The tags make cross-type equality (a voucher date
     # string equal to a ref amount string) impossible, exactly like the
     # separate joins; per-key cap groups are unchanged because the tags
-    # partition the key space into the same per-type groups.
+    # partition the key space into the same per-type groups. A NULL
+    # array on one side contributes no keys instead of nulling the
+    # concat (which would drop the page's keys from the other side too).
     def _bks(dates_col: str, amounts_col: str):
+        empty = F.array().cast("array<string>")
         return F.concat(
-            F.transform(dates_col, lambda d: F.concat(F.lit("d:"), d)),
-            F.transform(
-                amounts_col,
-                lambda a: F.concat(F.lit("a:"), normalize_amount(a)),
+            F.coalesce(
+                F.transform(dates_col, lambda d: F.concat(F.lit("d:"), d)),
+                empty,
+            ),
+            F.coalesce(
+                F.transform(
+                    amounts_col,
+                    lambda a: F.concat(F.lit("a:"), normalize_amount(a)),
+                ),
+                empty,
             ),
         )
 

@@ -282,3 +282,26 @@ def test_bloom_decontaminate_audit(spark):
     assert plan.count("BroadcastExchange") >= dedup.BLOOM_K
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     out.unpersist()
+
+
+def test_minhash_shingle_edge_cases(spark):
+    """Exact shingles: tokens shorter than 2 chars drop, docs under k
+    words become one joined shingle, repeats dedupe, NULL stays NULL."""
+    cases = {
+        "": [""],
+        "a": [""],
+        "ab": ["ab"],
+        "ab cd": ["ab cd"],
+        "ab cd ef": ["ab cd ef"],
+        "ab ab ab ab ab": ["ab ab ab"],
+        "x y z ab cd ef ab cd ef": ["ab cd ef", "cd ef ab", "ef ab cd"],
+        None: None,
+    }
+    docs = spark.createDataFrame(
+        list(enumerate(cases)), "doc_id long, text string"
+    )
+    got = {
+        r["text"]: r["shingles"]
+        for r in dedup.with_minhash(docs).select("text", "shingles").collect()
+    }
+    assert got == cases

@@ -45,3 +45,27 @@ def test_exact_dup_probe_gets_sim_one(spark):
     assert exact_probes, "fixture must contain exact duplicates"
     for k in exact_probes:
         assert got[k] == 1.0, k
+
+
+def test_null_dates_still_block_on_amounts(spark):
+    """A page whose dates array is NULL keeps its amount blocking keys
+    (on both the voucher and the reference side): with no fallback, the
+    only way to a candidate is the shared ``a:`` key."""
+    schema = (
+        "doc_id long, page_num int, text string, text_hash string, "
+        "dates array<string>, amounts array<string>"
+    )
+    text = "invoice 4471 total due 1,250.00 net thirty days"
+    v = spark.createDataFrame([(1, 1, text, "hv", None, ["1,250.00"])], schema)
+    r = spark.createDataFrame(
+        [
+            (10, 1, text, "hr10", ["2021-03-04"], ["1250.00"]),
+            (11, 1, text, "hr11", None, ["1 250.00"]),
+        ],
+        schema,
+    )
+    got = {
+        (row["t_doc"], row["t_page"])
+        for row in matching.match_pages(v, r, fallback_cap=0).collect()
+    }
+    assert got == {(10, 1), (11, 1)}

@@ -429,3 +429,16 @@ def test_media_phash_paths_have_no_cartesian(spark):
     for q in (Q.q_media_phash, Q.q_media_phash_pairs):
         plan = _plan(q(spark, SF_DIR))
         assert "CartesianProduct" not in plan
+
+
+def test_shingle_builders_tokenize_once(spark):
+    """with_minhash and winnow_fingerprints split each document once:
+    the tokens are a column the shingle builder consumes, never the
+    tokenizer expression re-evaluated per shingle (the O(n²) HOF
+    re-evaluation trap) or inlined into a pushed-down filter."""
+    from pdf_ocr_comparison_tool_spark.operators import dedup
+
+    docs = synth.load_table(spark, SF_DIR, "documents")
+    for build in (dedup.with_minhash, dedup.winnow_fingerprints):
+        optimized = build(docs)._jdf.queryExecution().optimizedPlan()
+        assert optimized.toString().count("split(") == 1, build.__name__
