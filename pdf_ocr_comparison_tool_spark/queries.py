@@ -1236,9 +1236,9 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_checkpoint_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S8-S10 manifest surface over a REAL partially-committed
     checkpoint dir (extraction job killed after 6 of 8 part commits):
-    committed_parts (run-fenced manifest read) + remaining_parts
-    (anti-join resume set) as one per-part view, oracled against a
-    relational recount of the extraction output."""
+    committed_parts (run-fenced manifest read) + its anti-join
+    remainder (the parts a resume writes) as one per-part view,
+    oracled against a relational recount of the extraction output."""
     from .sources import checkpoint as cp
 
     fixture = cp.ensure_partial_fixture(spark, sf_dir)
@@ -1246,7 +1246,7 @@ def q_checkpoint_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     all_parts = spark.range(cp.CKPT_FIXTURE_N_PARTS).select(
         F.col("id").cast("int").alias("part")
     )
-    rem = cp.remaining_parts(all_parts, lineage).withColumn(
+    rem = all_parts.join(lineage.select("part"), "part", "left_anti").withColumn(
         "missing", F.lit(True)
     )
     return (

@@ -10,13 +10,18 @@ Python anti-join). The Spark-native equivalent:
   (``part = md5(doc_id) % n``) — partition membership is a pure function
   of the data, never of cluster topology, so a re-run assigns every doc
   to the same part;
-* each completed part commits its data file together with a **lineage
-  row** (part, doc/span counts, wall ms, run id) — the lineage table is
-  the checkpoint manifest;
-* resume = ``left_anti`` join of the input's parts against committed
-  lineage parts, then process only the remainder. Parts are atomic:
-  a killed run leaves either (data+lineage) or nothing for each part,
-  so re-running yields exactly-once output.
+* each written part is committed by appending a **lineage row** (part,
+  doc/span counts, wall ms, run id) — the lineage table is the
+  checkpoint manifest, and the lineage row is the commit point;
+* resume = read the manifest once into an in-memory set of committed
+  part ids (metadata-scale: one row per part) and write every part not
+  in it, in one pass over the input.
+
+The data write precedes the lineage append, so a killed run can leave a
+part's data directory without its lineage row. That part is not
+committed: the next run writes it again, and the dynamic partition
+overwrite replaces the uncommitted directory, so re-running yields
+exactly-once output.
 
 On Iceberg this maps 1:1 to snapshot commits; the parquet-directory
 implementation below keeps the same contract for the sandbox.
@@ -27,6 +32,7 @@ from __future__ import annotations
 import os
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -43,65 +49,56 @@ def part_col(doc_id_col, n_parts: int) -> "F.Column":
     return hash_bucket(doc_id_col, n_parts).cast("int")
 
 
+def _lineage_path(out_dir: str) -> str | None:
+    path = os.path.join(out_dir, "_lineage")
+    return path if os.path.isdir(path) and os.listdir(path) else None
+
+
 def committed_parts(spark: SparkSession, out_dir: str) -> DataFrame:
     """The checkpoint manifest: ONE authoritative lineage row per part.
 
-    Run fencing: two racing (or zombie) writers can both pass the
-    anti-join before either commits and double-append lineage rows for
+    Run fencing: two racing (or zombie) writers can both read the
+    manifest before either commits and double-append lineage rows for
     the same part. The DATA stays byte-identical — every transform is
     deterministic and the dynamic partition overwrite replaces the same
     directory — so the race is resolved at read-back: deduplicate by
     part with deterministic precedence (lowest run_id wins; wall_ms
-    breaks a same-run tie). Every manifest consumer (resume anti-join,
-    stats, n_parts adoption) goes through here, so a duplicated append
-    can never double-count."""
-    path = os.path.join(out_dir, "_lineage")
-    if not os.path.isdir(path) or not os.listdir(path):
+    breaks a same-run tie). Every manifest consumer that reads stats
+    goes through here, so a duplicated append can never double-count."""
+    path = _lineage_path(out_dir)
+    if path is None:
         return spark.createDataFrame([], LINEAGE_SCHEMA)
     from pyspark.sql import Window
 
     w = Window.partitionBy("part").orderBy("run_id", "wall_ms")
     return (
-        spark.read.parquet(path)
+        spark.read.schema(LINEAGE_SCHEMA)
+        .parquet(path)
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
 
 
-def remaining_parts(
-    all_parts: DataFrame, lineage: DataFrame
-) -> DataFrame:
-    """J12: anti-join the committed manifest out of the input parts."""
-    return all_parts.join(lineage.select("part"), "part", "left_anti")
-
-
-def write_parts_batch(
-    spark: SparkSession,
-    with_part: DataFrame,
-    parts: list[int],
-    out_dir: str,
-    run_id: str,
-    n_parts: int,
-) -> None:
-    """Commit a BATCH of parts in ONE Spark job (dynamic partition
-    overwrite), then append their lineage rows as the commit point.
-
-    One job for all remaining parts instead of one job per part — at
-    n_parts ≈ 10⁴ the per-job driver serialization dominates wall time
-    (round-1 verdict); batching keeps exactly-once semantics because a
-    killed run leaves data files WITHOUT lineage rows, and the next run
-    recomputes those parts and dynamic-overwrite replaces them
-    atomically per partition directory.
-
-    Per-part stats are aggregated from the files just committed (no
-    second execution of the extraction DAG); ``wall_ms`` records the
-    batch job wall for each of its parts.
-    """
-    from ..operators.extraction import extract_ordered_spans
-
-    out = extract_ordered_spans(with_part.filter(F.col("part").isin(parts)))
-    commit_transformed_parts(spark, out, parts, out_dir, run_id, n_parts)
+def _todo_parts(
+    spark: SparkSession, out_dir: str, n_parts: int
+) -> tuple[list[int], int]:
+    """Read the manifest once into memory: (uncommitted part ids,
+    n_parts). The partition count is part of the checkpoint identity —
+    a different n_parts would re-key every doc and double-write — so a
+    committed run's n_parts is adopted. A set of part ids needs no run
+    fencing (a duplicated row names the same part), and a missing
+    manifest fires no job."""
+    path = _lineage_path(out_dir)
+    if path is None:
+        return list(range(n_parts)), n_parts
+    rows = spark.read.schema(LINEAGE_SCHEMA).parquet(path).select(
+        "part", "n_parts"
+    ).collect()
+    if rows:
+        n_parts = rows[0]["n_parts"]
+    done = {r["part"] for r in rows}
+    return [p for p in range(n_parts) if p not in done], n_parts
 
 
 def commit_transformed_parts(
@@ -111,45 +108,60 @@ def commit_transformed_parts(
     out_dir: str,
     run_id: str,
     n_parts: int,
-) -> None:
-    """Commit an already-transformed, part-keyed frame for the given
-    parts (dynamic partition overwrite + lineage append). Shared by the
-    extraction job (whose narrow transform commutes with the part
-    filter, so it pre-filters) and the corpus job (whose dedup verdict
-    is GLOBAL — it must transform the full corpus and only then filter
-    to the batch, or a resumed run would compute cluster keeps against
-    a partial corpus and disagree with the original run)."""
-    t0 = time.perf_counter()
+    fail_after_parts: int | None = None,
+) -> int:
+    """Commit ``parts`` of a transformed, part-keyed frame in one pass:
+    one dynamic-overwrite write, then one lineage append. Returns the
+    number of parts committed.
+
+    The frame is never pre-scanned to list its parts: the parts and
+    their stats come from the read-back of what was just written, so a
+    part the input never touches gets no lineage row. The ``rebalance``
+    hint on ``part`` writes one file per part (AQE still splits a part
+    larger than the advisory partition size). ``wall_ms`` records the
+    write's wall time for each of its parts.
+
+    ``fail_after_parts`` simulates a kill between the data write and
+    the lineage commit: every part's data is written, lineage is
+    appended for only the lowest ``fail_after_parts`` written parts,
+    then RuntimeError is raised."""
+    part = F.col("part")
     data_path = os.path.join(out_dir, "data")
+    if len(parts) < n_parts:  # a resume leaves committed parts alone
+        transformed = transformed.filter(part.isin(parts))
+    t0 = time.perf_counter()
     (
-        transformed.filter(F.col("part").isin(parts))
+        transformed.hint("rebalance", part)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("part")
         .parquet(data_path)
     )
     wall_ms = int((time.perf_counter() - t0) * 1000)
-    written = spark.read.parquet(data_path).filter(F.col("part").isin(parts))
+    written = (
+        spark.read.schema(transformed.schema).parquet(data_path)
+        .filter(part.isin(parts))
+    )
     n_spans = (
         F.coalesce(F.sum(F.size("spans")), F.lit(0))
         if "spans" in written.columns
         else F.lit(0).cast("long")
     )
-    stats = written.groupBy("part").agg(
-        F.count("*").alias("n_docs"),
-        n_spans.alias("n_spans"),
-    )
-    # one lineage row for EVERY part in the batch — a part whose data
-    # yields zero output rows still counts as committed (stats default
-    # to 0/0), or it would be re-selected on every resume forever
-    stat_map = {r["part"]: (r["n_docs"], r["n_spans"]) for r in stats.collect()}
-    rows = [
-        (p, n_parts, *stat_map.get(p, (0, 0)), wall_ms, run_id)
-        for p in parts
-    ]
-    spark.createDataFrame(rows, LINEAGE_SCHEMA).write.mode("append").parquet(
-        os.path.join(out_dir, "_lineage")
-    )
+    stats = sorted(
+        written.groupBy("part")
+        .agg(F.count("*").alias("n_docs"), n_spans.alias("n_spans"))
+        .collect()
+    )[:fail_after_parts]
+    if stats:
+        lineage = pd.DataFrame(
+            [(p, n_parts, d, s, wall_ms, run_id) for p, d, s in stats]
+        )
+        spark.createDataFrame(lineage, LINEAGE_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(os.path.join(out_dir, "_lineage"))
+    if fail_after_parts is not None:
+        raise RuntimeError(f"simulated failure after {len(stats)} parts")
+    return len(stats)
 
 
 def run_extraction_job(
@@ -160,35 +172,25 @@ def run_extraction_job(
     n_parts: int = 8,
     fail_after_parts: int | None = None,
 ) -> int:
-    """Resumable extraction job: batched part commit + anti-join resume.
+    """Resumable extraction job: every uncommitted part written and
+    committed in one pass (``commit_transformed_parts``).
 
     ``fail_after_parts`` simulates a mid-job kill for the resume test
-    (commits only that many parts, then raises). Returns the number of
-    parts processed in this run.
+    (data written, lineage committed for only that many parts, then
+    raises). Returns the number of parts committed in this run; a fully
+    committed output returns 0 without evaluating ``docs``.
     """
-    # resume safety: partition count is part of the checkpoint identity —
-    # a different n_parts would re-key every doc and double-write. Adopt
-    # the committed run's n_parts if one exists.
-    existing = committed_parts(spark, out_dir)
-    first = existing.select("n_parts").limit(1).collect()
-    if first:
-        n_parts = first[0]["n_parts"]
+    from ..operators.extraction import extract_ordered_spans
 
-    with_part = docs.withColumn("part", part_col(F.col("doc_id"), n_parts))
-    todo = [
-        r["part"]
-        for r in remaining_parts(
-            with_part.select("part").distinct(), committed_parts(spark, out_dir)
-        )
-        .orderBy("part")
-        .collect()
-    ]
-    batch = todo if fail_after_parts is None else todo[:fail_after_parts]
-    if batch:
-        write_parts_batch(spark, with_part, batch, out_dir, run_id, n_parts)
-    if fail_after_parts is not None:
-        raise RuntimeError(f"simulated failure after {len(batch)} parts")
-    return len(batch)
+    todo, n_parts = _todo_parts(spark, out_dir, n_parts)
+    if not todo:
+        return 0
+    out = extract_ordered_spans(
+        docs.withColumn("part", part_col(F.col("doc_id"), n_parts))
+    )
+    return commit_transformed_parts(
+        spark, out, todo, out_dir, run_id, n_parts, fail_after_parts
+    )
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
@@ -207,8 +209,8 @@ def run_corpus_job(
 ) -> int:
     """Resumable corpus-build job: admission verdict (exact dedup →
     near-dup cluster keep → length/quality/repetition) + deterministic
-    split over the FULL corpus, committed in content-keyed part batches
-    with anti-join resume — the LLM-ingest twin of run_extraction_job.
+    split over the FULL corpus, committed in content-keyed parts through
+    the same one-pass commit as run_extraction_job.
 
     The verdict is recomputed over the whole input on every run (never
     just the remaining parts): a doc's near-dup keep depends on OTHER
@@ -224,11 +226,9 @@ def run_corpus_job(
     """
     from ..operators.pipeline import corpus_filter, data_split
 
-    existing = committed_parts(spark, out_dir)
-    first = existing.select("n_parts").limit(1).collect()
-    if first:
-        n_parts = first[0]["n_parts"]
-
+    todo, n_parts = _todo_parts(spark, out_dir, n_parts)
+    if not todo:
+        return 0
     cached: list[DataFrame] = []
     try:
         verdict = (
@@ -245,23 +245,9 @@ def run_corpus_job(
             .join(data_split(docs).select("doc_id", "split"), "doc_id")
             .withColumn("part", part_col(F.col("doc_id"), n_parts))
         )
-        todo = [
-            r["part"]
-            for r in remaining_parts(
-                admitted.select("part").distinct(),
-                committed_parts(spark, out_dir),
-            )
-            .orderBy("part")
-            .collect()
-        ]
-        batch = todo if fail_after_parts is None else todo[:fail_after_parts]
-        if batch:
-            commit_transformed_parts(
-                spark, admitted, batch, out_dir, run_id, n_parts
-            )
-        if fail_after_parts is not None:
-            raise RuntimeError(f"simulated failure after {len(batch)} parts")
-        return len(batch)
+        return commit_transformed_parts(
+            spark, admitted, todo, out_dir, run_id, n_parts, fail_after_parts
+        )
     finally:
         # release the verdict's cached frames even on the simulated-kill
         # path — a resume loop in one long-lived session must not
@@ -286,22 +272,24 @@ def publish_training_shards(
 
 # ------------------------------------------------------- oracle fixture
 # S8-S10 driver-oracle support: a deterministic PARTIALLY-committed
-# checkpoint directory (the real commit path, killed mid-job), cached
-# per (sf_dir, spec) so the manifest queries are repeatable.
+# checkpoint directory (the real commit path, killed between the data
+# write and the lineage commit), cached per (sf_dir, spec) so the
+# manifest queries are repeatable.
 CKPT_FIXTURE_N_PARTS = 8
 CKPT_FIXTURE_COMMIT = 6  # parts committed before the simulated kill
-_CKPT_FIXTURE_VERSION = 1
+_CKPT_FIXTURE_VERSION = 2
 
 
 def ensure_partial_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Build (once) and return a checkpoint output dir where the REAL
-    extraction job committed the first CKPT_FIXTURE_COMMIT of
-    CKPT_FIXTURE_N_PARTS content-keyed parts and was then killed
-    (``fail_after_parts``) — the state the resume / manifest surface
-    exists for. Deterministic: parts are hash_bucket(doc_id) keyed and
-    the batch takes the lowest remaining part ids, so the committed set
-    is a pure function of the input table. Built atomically (tmp dir +
-    rename) so concurrent builders can't interleave."""
+    extraction job wrote its CKPT_FIXTURE_N_PARTS content-keyed parts
+    but was killed after committing lineage for only the lowest
+    CKPT_FIXTURE_COMMIT nonempty ones (``fail_after_parts``) — the
+    state the resume / manifest surface exists for. The manifest
+    queries read only ``_lineage``. Deterministic: parts are
+    hash_bucket(doc_id) keyed, so the committed set is a pure function
+    of the input table. Built atomically (tmp dir + rename) so
+    concurrent builders can't interleave."""
     import hashlib
     import shutil
     import tempfile

@@ -52,6 +52,61 @@ def test_kill_and_resume_exactly_once(spark):
         assert cp.run_extraction_job(spark, docs, out, run_id="r3") == 0
 
 
+def test_fully_committed_resume_skips_input(spark):
+    """A resume of a fully committed output returns 0 without
+    evaluating the input: the manifest alone says nothing is left."""
+    docs = synth.spans_df(spark, SF_DIR)
+    boom = docs.filter(F.raise_error(F.lit("input evaluated")).isNull())
+    with pytest.raises(Exception, match="input evaluated"):
+        boom.count()
+    with tempfile.TemporaryDirectory() as out:
+        assert cp.run_extraction_job(spark, docs, out, run_id="r1", n_parts=4) == 4
+        assert cp.run_extraction_job(spark, boom, out, run_id="r2", n_parts=4) == 0
+
+
+def test_one_file_per_committed_part(spark):
+    """Layout guard: each part directory holds exactly one parquet
+    file, not one per writing task."""
+    import glob
+    import os
+
+    docs = synth.spans_df(spark, SF_DIR)
+    with tempfile.TemporaryDirectory() as out:
+        assert cp.run_extraction_job(spark, docs, out, run_id="r1", n_parts=8) == 8
+        part_dirs = glob.glob(os.path.join(out, "data", "part=*"))
+        assert len(part_dirs) == 8
+        for d in part_dirs:
+            assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+
+
+def test_sparse_parts_commit_only_nonempty(spark):
+    """An input touching 3 of 64 parts commits one lineage row per
+    nonempty part (no 0/0 rows for untouched parts), and a kill after
+    2 parts commits the two lowest nonempty part ids."""
+    docs = synth.spans_df(spark, SF_DIR)
+    by_part: dict[int, int] = {}
+    for r in docs.select(
+        "doc_id", cp.part_col(F.col("doc_id"), 64).alias("p")
+    ).orderBy("doc_id").collect():
+        by_part.setdefault(r["p"], r["doc_id"])
+        if len(by_part) == 3:
+            break
+    sparse = docs.filter(F.col("doc_id").isin(list(by_part.values())))
+    parts = sorted(by_part)
+    with tempfile.TemporaryDirectory() as out:
+        with pytest.raises(RuntimeError, match="simulated failure"):
+            cp.run_extraction_job(
+                spark, sparse, out, run_id="r1", n_parts=64, fail_after_parts=2
+            )
+        lin = cp.committed_parts(spark, out).collect()
+        assert sorted(r["part"] for r in lin) == parts[:2]
+        assert cp.run_extraction_job(spark, sparse, out, run_id="r2", n_parts=64) == 1
+        lin = cp.committed_parts(spark, out).collect()
+        assert sorted(r["part"] for r in lin) == parts
+        assert all(r["n_docs"] == 1 for r in lin)
+        assert cp.read_output(spark, out).count() == 3
+
+
 def test_part_assignment_stable(spark):
     docs = synth.spans_df(spark, SF_DIR)
     a = docs.select("doc_id", cp.part_col(F.col("doc_id"), 8).alias("p"))
